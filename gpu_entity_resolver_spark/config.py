@@ -53,7 +53,6 @@ class BlockingConfig:
     seed: int = 42                        # deterministic hash seed
     sorted_neighborhood_prefix: int = 8   # chars of normalized text for SN key
     max_block_size: int = 128             # blocks above this get salted/capped
-    salt_buckets: int = 8                 # salt fan-out for hot blocks
     # Document-frequency ceiling for a single blocking key: keys shared by
     # more than this many docs are DROPPED before salting (they carry no
     # discriminative signal — an empty-text LSH band, a boilerplate footer

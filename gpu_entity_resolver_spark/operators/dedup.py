@@ -69,9 +69,9 @@ def minhash_dedup(
         )
     )
     pairs = candidate_pairs(
-        lsh_block_keys(norm, "doc_id", "nt", cfg, with_tokens=False),
+        lsh_block_keys(norm, "doc_id", "nt", cfg),
+        sort_token_table(norm, "doc_id", "nt"),
         cfg,
-        tokens=sort_token_table(norm, "doc_id", "nt"),
     )
     # single-width shingles + pruned vectors: same separation at a third of
     # the exploded-token volume (see ScoringConfig.tfidf_ngram_lo). Vectors
@@ -268,9 +268,9 @@ def ngram_jaccard_pairs(
         )
     )
     pairs = candidate_pairs(
-        lsh_block_keys(norm, "doc_id", "nt", cfg, with_tokens=False),
+        lsh_block_keys(norm, "doc_id", "nt", cfg),
+        sort_token_table(norm, "doc_id", "nt"),
         cfg,
-        tokens=sort_token_table(norm, "doc_id", "nt"),
     )
     grams = norm.select(
         "doc_id",

@@ -146,7 +146,7 @@ def merge_similar_clusters(
         F.col("canonical_text").alias(text_col),
     )
     rep_keys, rep_tokens = blocking_plan(reps, "doc_id", text_col, cfg=cfg.blocking)
-    pairs = candidate_pairs(rep_keys, cfg.blocking, tokens=rep_tokens)
+    pairs = candidate_pairs(rep_keys, rep_tokens, cfg.blocking)
     # exact_only: the centroid prefilter below is >= the decision-band
     # floor, so only exact-jw rows can pass — the approx branches (and
     # their two barriers) are dead weight on this #clusters-sized input.
@@ -544,7 +544,7 @@ def consolidate_similar_addresses(
     replaces every member's key. Runs over DISTINCT keys only, so the heavy
     work is proportional to unique addresses, not rows."""
     from ..config import BlockingConfig
-    from .blocking import blocking_keys, candidate_pairs
+    from .blocking import blocking_plan, candidate_pairs
     from .connected_components import connected_components
     from .scoring import make_jw_udf
 
@@ -559,9 +559,8 @@ def consolidate_similar_addresses(
         .withColumn("_aid", F.xxhash64(addr_col))
         .localCheckpoint(eager=False)
     )
-    pairs = candidate_pairs(
-        blocking_keys(uniq, "_aid", addr_col, cfg=blocking_cfg), blocking_cfg
-    )
+    keys, tokens = blocking_plan(uniq, "_aid", addr_col, cfg=blocking_cfg)
+    pairs = candidate_pairs(keys, tokens, blocking_cfg)
     jw = make_jw_udf(jw_chars)
     texts = uniq.select(F.col("_aid"), F.col(addr_col).alias("_t"))
     edges = (
@@ -784,8 +783,8 @@ def assign_new_documents(
     # and rep x rep pairs only to discard them with semi-joins — this form
     # produces exactly the (new x rep) pairs at roughly half (often far less)
     # of the pair volume, and can never lose a pair to salt-group splits.
-    # Narrow keys (r6): this path never salts, so the sort tokens the wide
-    # key tables carried were dead weight in both key builds and the join.
+    # This path never salts, so only the key tables are used (the token
+    # tables are never evaluated).
     new_keys = blocking_plan(
         new_docs, "doc_id", "norm_text", cfg=cfg.blocking
     )[0].select(F.col("doc_id").alias("new_id"), "block_key")

@@ -3,12 +3,15 @@
 Three signals per candidate pair, combined by configurable weights (the
 reference's stream energy proportions become score weights — SURVEY.md V6):
 
-- TF-IDF char-shingle cosine — pure JVM equi-join + agg (shingles.pair_cosine),
-  re-expressing reference utils.py:211-232;
+- TF-IDF char-shingle cosine — per-doc pruned vectors built map-side
+  against a broadcast IDF table, then a JVM fold dot product per pair
+  (shingles.doc_vector_table + shingles.pair_cosine_vecs), re-expressing
+  reference utils.py:211-232;
 - Jaro-Winkler — Arrow-batched pandas UDF over the numpy kernel
   (functions/simfns.py), no per-row Python;
-- Levenshtein ratio — Spark's built-in JVM ``levenshtein`` with threshold
-  early-exit, stays inside whole-stage codegen.
+- Levenshtein ratio — Arrow-batched pandas UDF over the Myers bit-parallel
+  kernel (functions/simfns.levenshtein_batch), bit-equal to Spark's
+  builtin ``levenshtein``.
 """
 
 from __future__ import annotations

@@ -37,9 +37,8 @@ def _corpus(spark):
 
 
 def _rows(df):
-    return sorted(
-        (r.doc_id, r.block_key, r.sort_key, r.sort_key2) for r in df.collect()
-    )
+    assert df.columns == ["doc_id", "block_key"]
+    return sorted((r.doc_id, r.block_key) for r in df.collect())
 
 
 def test_lsh_numpy_matches_jvm(spark):

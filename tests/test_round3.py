@@ -320,9 +320,7 @@ def test_exact_only_equals_filtered_full(spark, sf_dir):
     )
     bcfg = BlockingConfig()
     keys, tokens = blocking_plan(docs, "doc_id", "norm_text", cfg=bcfg)
-    pairs = candidate_pairs(keys, bcfg, tokens=tokens).localCheckpoint(
-        eager=True
-    )
+    pairs = candidate_pairs(keys, tokens, bcfg).localCheckpoint(eager=True)
     for scfg in (
         ScoringConfig(),
         ScoringConfig(jw_decision_band=None),
