@@ -129,23 +129,15 @@ class ScoringConfig:
     # Decision-band Jaro-Winkler: JW carries only `jaro_winkler_weight /
     # total` of the score, so a pair whose tfidf+lev partial score cannot
     # reach `lo` even with a perfect JW doesn't need the kernel — its true
-    # score is provably < lo, below every engine threshold AND below every
-    # mean/median/rank consumer's admission bar (attach tau, merge
-    # centroid prefilter, ensemble thresholds). ONLY that low side is
-    # skipped; pairs at or above it — including confident ones — get an
-    # exact JW, because attach_singletons' neighbor means,
-    # merge_similar_clusters' interpolated median, mutual-rank orderings
-    # and avg_pair_score/confidence all consume score VALUES, not just
-    # threshold outcomes. Skipped pairs report score = partial (`jw`
-    # null): underreported by at most jw_share, never overreported, and
-    # always strictly below lo either way. Threshold DECISIONS at >= lo
-    # are exactly invariant; MEANS over pair sets that include sub-band
-    # pairs are not — which is why the resolve pipeline filters jw-null
-    # rows out of attach_singletons' neighbor set (plans/resolve.py)
-    # instead of letting approximate scores into its mean/ratio tests. `hi` documents the top of the
-    # engine's threshold range for band-aware consumers but no longer
-    # gates the kernel. The default lo matches the lowest engine
-    # threshold (edge 0.55); lower it if you move a threshold below.
+    # score is provably < lo. score_pairs leaves such pairs out (as it does
+    # cosine-prefilter prunes); pairs at or above it — including confident
+    # ones — get an exact JW, because attach_singletons' neighbor means,
+    # merge_similar_clusters' median, mutual-rank orderings and
+    # avg_pair_score/confidence consume score VALUES, not just threshold
+    # outcomes. Thresholds are checked against the resulting bound
+    # (scoring.approx_score_bound: lo - jw_share, 0.45 by default) where
+    # they are read, and a threshold below it raises. `hi` no longer gates
+    # the kernel; it stays so saved model JSON still loads.
     # None = always compute JW (exact scores everywhere — the entity path
     # uses this, where JW carries 35% weight).
     jw_decision_band: tuple[float, float] | None = (0.55, 0.90)

@@ -130,13 +130,30 @@ def merge_similar_clusters(
        ADDRESSES are also similar — the name-edge ∩ addr-edge intersection;
     5. merged components relabel via connected components (replaces the
        reference's union-find loop, utils.py:570-579).
+
+    ``score_pairs`` leaves out pairs scoring below ``approx_score_bound``;
+    a left-out member pair counts as 0.0 in the median. No decision
+    changes while ``merge_median_threshold`` > (bound + 1) / 2: setting
+    scores below the bound to 0.0 moves no score at or above it to another
+    rank, and a median whose middle ranks hold a score below the bound is
+    below (bound + 1) / 2 either way. The centroid and max thresholds must
+    be >= the bound.
     """
     from .blocking import blocking_plan, candidate_pairs
     from .connected_components import connected_components
-    from .scoring import make_jw_udf, score_pairs
+    from .scoring import approx_score_bound, check_threshold, make_jw_udf, score_pairs
 
     cfg = cfg or ResolverConfig()
     ccfg = cfg.clustering
+    for name in ("centroid_similarity_threshold", "merge_max_threshold"):
+        check_threshold(name, getattr(ccfg, name), cfg.scoring)
+    median_floor = (approx_score_bound(cfg.scoring) + 1.0) / 2.0
+    if ccfg.merge_median_threshold <= median_floor:
+        raise ValueError(
+            f"merge_median_threshold={ccfg.merge_median_threshold} must be "
+            f"above {median_floor:.4g}, (1 + the score bound of the pairs "
+            "score_pairs leaves out) / 2"
+        )
     # No barrier here: `reps` is a two-column projection of `canon`, which
     # the caller already materialized (plans/resolve.py checkpoints canon0
     # eagerly) — a localCheckpoint of a projection of cached data only
@@ -147,12 +164,7 @@ def merge_similar_clusters(
     )
     rep_keys, rep_tokens = blocking_plan(reps, "doc_id", text_col, cfg=cfg.blocking)
     pairs = candidate_pairs(rep_keys, rep_tokens, cfg.blocking)
-    # exact_only: the centroid prefilter below is >= the decision-band
-    # floor, so only exact-jw rows can pass — the approx branches (and
-    # their two barriers) are dead weight on this #clusters-sized input.
-    rep_scored = score_pairs(
-        pairs, reps, "doc_id", text_col, cfg.scoring, exact_only=True
-    )
+    rep_scored = score_pairs(pairs, reps, "doc_id", text_col, cfg.scoring)
     cand = rep_scored.where(
         F.col("score") >= ccfg.centroid_similarity_threshold
     ).select(F.col("src").alias("_ca"), F.col("dst").alias("_cb"))
@@ -207,7 +219,8 @@ def merge_similar_clusters(
         cfg.scoring,
     )
     stats = (
-        mem_pairs.join(mem_scored, ["src", "dst"])
+        mem_pairs.join(mem_scored, ["src", "dst"], "left")
+        .withColumn("score", F.coalesce("score", F.lit(0.0)))
         .groupBy("_ca", "_cb")
         .agg(
             F.expr("percentile(score, 0.5)").alias("_med"),
@@ -263,12 +276,10 @@ def attach_singletons(
       >= ``min_matching`` of them individually >= tau.
 
     ``pairs``: (src, dst, score) — the pipeline's already-scored candidate
-    pairs (no extra scoring pass). Scores must be EXACT: the mean and
-    ratio tests consume score values, so callers scoring with a
-    decision band / cosine prefilter must drop the approximated
-    (jw-null) rows first, as plans/resolve.py does. ``labels``:
-    (doc_id, cluster). Returns labels with singleton clusters re-pointed
-    where attached."""
+    pairs (no extra scoring pass). Scores must be EXACT, as
+    ``score_pairs`` returns them: the mean and ratio tests consume score
+    values. ``labels``: (doc_id, cluster). Returns labels with singleton
+    clusters re-pointed where attached."""
     sizes = labels.groupBy("cluster").agg(F.count("*").alias("_sz"))
     # One narrow (doc_id, is-singleton, cluster-if-clustered) role row per
     # doc. The former shape unioned BOTH orientations of the pair table
@@ -771,9 +782,10 @@ def assign_new_documents(
     Returns (doc_id, cluster, match_score, is_new_entity).
     """
     from .blocking import blocking_plan
-    from .scoring import score_pairs
+    from .scoring import check_threshold, score_pairs
 
     cfg = cfg or ResolverConfig()
+    check_threshold("edge_threshold", cfg.scoring.edge_threshold, cfg.scoring)
     reps = canon.select(
         F.col("cluster").alias("doc_id"), F.col("canonical_text").alias("norm_text")
     )
@@ -809,17 +821,15 @@ def assign_new_documents(
         .select("new_id", "rep_id")
         .distinct()
     )
-    # exact_only: the winner filter below keeps rank-1 rows at score >=
-    # edge_threshold (>= the band floor), and an approx row can only carry
-    # score < the floor — if one ever won the rank its doc was unmatched
-    # either way, so dropping the approx branches changes no assignment.
+    # The winner filter below keeps rank-1 rows at score >= edge_threshold
+    # (>= approx_score_bound, checked above); a left-out pair scores below
+    # it, so had one won the rank its doc was unmatched either way.
     scored = score_pairs(
         nr.select(F.col("new_id").alias("src"), F.col("rep_id").alias("dst")),
         combined,
         "doc_id",
         "norm_text",
         cfg.scoring,
-        exact_only=True,
     )
     best = (
         scored.withColumn(

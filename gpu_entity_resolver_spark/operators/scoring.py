@@ -71,32 +71,60 @@ def content_sketch(col, seg: int):
     )
 
 
+def _total_weight(cfg: ScoringConfig) -> float:
+    return (
+        cfg.tfidf_weight
+        + cfg.jaro_winkler_weight
+        + cfg.levenshtein_weight
+        + cfg.phonetic_weight
+    )
+
+
+def approx_score_bound(cfg: ScoringConfig) -> float:
+    """Score bound of the pairs ``score_pairs`` leaves out. A
+    cosine-prefilter prune's tfidf share is below ``tfidf_weight *
+    cosine_prefilter / total``; a decision-band skip's partial (tfidf +
+    lev) score is below ``lo - jw_share``. A threshold at or above this
+    bound selects the same pairs from the exact rows as from the exact
+    rows plus those partial scores."""
+    total_w = _total_weight(cfg)
+    bound = cfg.tfidf_weight * cfg.cosine_prefilter / total_w
+    if cfg.jw_decision_band is not None:
+        lo = cfg.jw_decision_band[0]
+        bound = max(bound, lo - cfg.jaro_winkler_weight / total_w)
+    return bound
+
+
+def check_threshold(name: str, value: float, cfg: ScoringConfig) -> None:
+    """Raise ``ValueError`` when ``value`` would admit pairs that
+    ``score_pairs`` leaves out (see :func:`approx_score_bound`)."""
+    bound = approx_score_bound(cfg)
+    if value < bound:
+        raise ValueError(
+            f"{name}={value} is below {bound:.4g}, the score bound of the "
+            "pairs score_pairs leaves out (cosine_prefilter / "
+            "jw_decision_band); raise the threshold or lower the prefilter "
+            "or band floor"
+        )
+
+
 def score_pairs(
     pairs: DataFrame,
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "norm_text",
     cfg: ScoringConfig | None = None,
-    exact_only: bool = False,
 ) -> DataFrame:
     """Score candidate pairs; returns (src, dst, tfidf_cos, lev_ratio, jw,
-    ph_sim, score). ``pairs`` has (src, dst); ``docs`` has (id_col, text_col).
+    ph_sim, score) for the EXACTLY scored pairs only. ``pairs`` has (src,
+    dst); ``docs`` has (id_col, text_col).
 
-    ``exact_only=True`` returns ONLY the exact-score rows (jw non-null) —
-    row-for-row the same frame as ``score_pairs(...).where(jw IS NOT
-    NULL)``, but as one LINEAR plan: the cosine-prefilter prunes and the
-    decision-band skips are never unioned in, so the two materialization
-    barriers the branching form needs (the cos table feeding
-    survivors+pruned, the partial-score table feeding banded+rest) drop
-    out, and with them two full intermediate materializations (~5.4M cos
-    rows on the bench corpus) and their jobs. Correct for every caller
-    whose downstream reads only exact rows: any score >= the band floor
-    implies an exact jw (score <= _partial + jw_share), so threshold
-    consumers at or above the floor — resolve's edges, assign_new's
-    >= edge_threshold winner, merge's >= centroid prefilter — and
-    explicit jw-non-null consumers (G8 attachment) see identical rows.
-    Callers aggregating over sub-band scores (merge's sampled-member
-    median) must keep the default.
+    Pairs below the cosine prefilter, and (with a decision band) pairs
+    whose score cannot reach the band floor, are left out: their scores
+    are below :func:`approx_score_bound`, so every consumer thresholding at
+    or above that bound sees the same pairs. Callers check their
+    thresholds with :func:`check_threshold`. The plan is linear — no
+    union, no barrier.
 
     TF-IDF cosine sees the FULL normalized text (linear cost, pruned
     vectors); JW/Levenshtein see the content sketch (bounded quadratic).
@@ -135,20 +163,14 @@ def score_pairs(
         n_lo=cfg.tfidf_ngram_lo, n_hi=cfg.tfidf_ngram_hi,
         min_df=cfg.tfidf_min_df, top_k=cfg.tfidf_top_k,
     )
-    # Barrier: cos feeds both the survivors branch and the pruned branch —
-    # except in exact_only mode, where the pruned branch does not exist and
-    # cos flows straight into the survivors filter (single consumer).
     cos = pair_cosine_vecs(pairs, vecs)
-    if not exact_only:
-        cos = cos.localCheckpoint(eager=False)
 
     # Phase 2 — JW + Levenshtein only for pairs passing the cosine
     # prefilter. This is the reference's centroid-prefilter pattern
     # (utils.py:602-621) applied to edit distances: on web corpora the
     # overwhelming majority of candidate pairs have near-zero shingle
     # cosine and cannot be duplicates; skipping their quadratic edit
-    # kernels is the dominant scoring cost lever. Pairs below the
-    # prefilter keep score = tfidf share only (by construction < tau).
+    # kernels is the dominant scoring cost lever.
     survivors = cos.where(F.col("tfidf_cos") >= cfg.cosine_prefilter)
     side_cols = ["doc_id", "t"] + (["ph"] if use_ph else [])
     sketches = texts.select(*side_cols)
@@ -184,23 +206,17 @@ def score_pairs(
         max_len.cast("int"),
     )
     jw_udf = make_jw_udf(max_chars=3 * seg)
-    total_w = (
-        cfg.tfidf_weight
-        + cfg.jaro_winkler_weight
-        + cfg.levenshtein_weight
-        + cfg.phonetic_weight
-    )
+    total_w = _total_weight(cfg)
     ph_term = cfg.phonetic_weight * F.coalesce(F.col("ph_sim"), F.lit(0.0))
     if cfg.jw_decision_band is None:
-        scored = with_texts.select(
+        return with_texts.select(
             "src",
             "dst",
             "tfidf_cos",
             (1.0 - lev / max_len).alias("lev_ratio"),
             jw_udf("t_a", "t_b").alias("jw"),
             ph_sim.alias("ph_sim"),
-        )
-        full = scored.withColumn(
+        ).withColumn(
             "score",
             (
                 cfg.tfidf_weight * F.col("tfidf_cos")
@@ -210,28 +226,19 @@ def score_pairs(
             )
             / F.lit(total_w),
         )
-        if exact_only:
-            return full
-    else:
-        # Phase 2b — decision-band JW. The partial (tfidf + lev) score is
-        # pure JVM; the memory-bandwidth-bound numpy JW kernel is SKIPPED
-        # only on the LOW side: pairs whose partial score cannot reach `lo`
-        # even with a perfect JW (true score provably < lo). That side is
-        # where the candidate volume lives (sub-threshold garbage pairs);
-        # the high side (partial >= hi) IS computed, because confident
-        # pairs flow into mean/median/rank consumers — attach_singletons'
-        # neighbor means, merge_similar_clusters' interpolated median,
-        # mutual-rank orderings, avg_pair_score -> confidence — and those
-        # need exact values, not a jw-as-0 underreport. Every threshold
-        # comparison at or above `lo` is exactly invariant; skipped pairs
-        # report score = partial with jw null (same convention as the
-        # cosine prefilter branch below) and can only be underreported,
-        # never overreported. `hi` is kept in the config for consumers
-        # that want to reason about the band, but no longer gates the
-        # kernel.
-        lo, _hi = cfg.jw_decision_band
-        jw_share = cfg.jaro_winkler_weight / total_w
-        base = with_texts.select(
+    # Phase 2b — decision-band JW. The partial (tfidf + lev) score is pure
+    # JVM; the memory-bandwidth-bound numpy JW kernel runs only for pairs
+    # whose partial score can still reach `lo` with a perfect JW — the
+    # rest (true score provably < lo) are left out. That low side is where
+    # the candidate volume lives (sub-threshold garbage pairs); confident
+    # pairs above the band keep an exact JW, because mean/median/rank
+    # consumers (attach_singletons' neighbor means, merge's median,
+    # avg_pair_score -> confidence) read score values. `hi` stays in the
+    # config but does not gate the kernel.
+    lo, _hi = cfg.jw_decision_band
+    jw_share = cfg.jaro_winkler_weight / total_w
+    return (
+        with_texts.select(
             "src",
             "dst",
             "tfidf_cos",
@@ -239,7 +246,8 @@ def score_pairs(
             ph_sim.alias("ph_sim"),
             "t_a",
             "t_b",
-        ).withColumn(
+        )
+        .withColumn(
             "_partial",
             (
                 cfg.tfidf_weight * F.col("tfidf_cos")
@@ -248,43 +256,11 @@ def score_pairs(
             )
             / F.lit(total_w),
         )
-        if not exact_only:
-            # barrier: both branches read the joined+lev'd table once
-            base = base.localCheckpoint(eager=False)
-        need_jw = F.col("_partial") + F.lit(jw_share) >= F.lit(lo)
-        out_cols = ["src", "dst", "tfidf_cos", "lev_ratio", "jw", "ph_sim", "score"]
-        banded = (
-            base.where(need_jw)
-            .withColumn("jw", jw_udf("t_a", "t_b"))
-            .withColumn(
-                "score",
-                F.col("_partial")
-                + F.lit(jw_share) * F.col("jw"),
-            )
-            .select(*out_cols)
-        )
-        if exact_only:
-            return banded
-        rest = (
-            base.where(~need_jw)
-            .withColumn("jw", F.lit(None).cast("double"))
-            .withColumn("score", F.col("_partial"))
-            .select(*out_cols)
-        )
-        full = banded.unionByName(rest)
-    pruned = (
-        cos.where(F.col("tfidf_cos") < cfg.cosine_prefilter)
-        .select(
-            "src",
-            "dst",
-            "tfidf_cos",
-            F.lit(None).cast("double").alias("lev_ratio"),
-            F.lit(None).cast("double").alias("jw"),
-            F.lit(None).cast("double").alias("ph_sim"),
-            (cfg.tfidf_weight * F.col("tfidf_cos") / F.lit(total_w)).alias("score"),
-        )
+        .where(F.col("_partial") + F.lit(jw_share) >= F.lit(lo))
+        .withColumn("jw", jw_udf("t_a", "t_b"))
+        .withColumn("score", F.col("_partial") + F.lit(jw_share) * F.col("jw"))
+        .select("src", "dst", "tfidf_cos", "lev_ratio", "jw", "ph_sim", "score")
     )
-    return full.unionByName(pruned)
 
 
 def edges_above_threshold(scores: DataFrame, threshold: float) -> DataFrame:

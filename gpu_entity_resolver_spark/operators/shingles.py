@@ -1,45 +1,69 @@
-"""Character-shingle machinery shared by TF-IDF scoring and MinHash blocking.
+"""Character-shingle TF-IDF vectors and the per-pair cosine.
 
 The reference vectorizes with cuML ``TfidfVectorizer(analyzer='char',
 ngram_range=(3,5), sublinear_tf=True)`` (reference resolver.py:329-350,
-config.py:57-64). Here the same weighting is computed as a two-pass
-DataFrame job producing an exploded ``(doc_id, shingle, w)`` table with
-L2-normalized sublinear-TF-IDF weights — pure JVM column math, no Python.
-
-At 100 TB the exploded table is large but shuffle-friendly: every downstream
-use (doc-frequency agg, pair-cosine join) is an equi-join/agg on ``shingle``
-or ``doc_id``; Catalyst + AQE handle partial aggregation and skew.
+config.py:57-64). Here one numpy gram kernel (:func:`_gram_kernel`) turns
+each document's byte n-grams into int64 codes map-side;
+:func:`doc_vector_table` builds per-doc pruned, L2-normalized sublinear
+TF-IDF vectors against a broadcast document-frequency table, with
+:func:`tfidf_weights` + :func:`doc_vectors` as the shuffle-based fallback
+for vocabularies too large to broadcast; :func:`pair_cosine_vecs` attaches
+two vectors per candidate pair and folds their dot product in the JVM.
 """
 
 from __future__ import annotations
 
 import hashlib
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def char_shingles(col_name: str, n_lo: int, n_hi: int) -> Column:
-    """Array of all char n-grams for n in [n_lo, n_hi] of a string column.
+def _gram_kernel(n_lo: int, n_hi: int) -> Callable[[str | None], np.ndarray]:
+    """Return ``codes(text)``: the int64 code of every byte n-gram of the
+    UTF-8 text for n in [n_lo, n_hi], repeats included.
 
-    Pure SQL higher-order functions: ``transform(sequence(...))`` per width,
-    concatenated. Strings shorter than n contribute the whole string once
-    (mirrors vectorizer behavior of producing no n-gram; we keep the whole
-    string so very short docs still block/score).
-    """
-    parts = []
-    for n in range(n_lo, n_hi + 1):
-        parts.append(
-            f"CASE WHEN length({col_name}) >= {n} THEN "
-            f"transform(sequence(1, length({col_name}) - {n} + 1),"
-            f" i -> substring({col_name}, i, {n})) "
-            f"ELSE array({col_name}) END"
+    Each gram becomes its n bytes packed base-256 via a vectorized
+    sliding-window dot product, plus a width tag at bit 48 (hash semantics
+    are internal to the scorer — nothing downstream needs xxhash parity).
+    A text shorter than n contributes one deterministic code for the whole
+    string at that width, so very short docs still score. Codes are
+    strictly positive and never collide across widths."""
+    # width 7+ would overflow into the tag and silently collide terms
+    # across widths
+    if n_hi > 6:
+        raise ValueError(
+            f"shingle width n_hi={n_hi} exceeds 6; gram codes only hold 6 "
+            "bytes below the width tag at bit 48"
         )
-    return F.expr("concat(" + ", ".join(parts) + ")")
+    widths = list(range(n_lo, n_hi + 1))
+    mults = {n: (256 ** np.arange(n, dtype=np.int64)) for n in widths}
+    tags = {n: np.int64(n) << np.int64(48) for n in widths}
+
+    def codes(text: str | None) -> np.ndarray:
+        b = np.frombuffer(
+            ("" if text is None else str(text)).encode("utf-8"), dtype=np.uint8
+        )
+        parts = []
+        for n in widths:
+            if len(b) >= n:
+                win = np.lib.stride_tricks.sliding_window_view(b, n)
+                parts.append(win.astype(np.int64) @ mults[n] + tags[n])
+            else:
+                digest = hashlib.md5(bytes(b) + bytes([n])).digest()
+                parts.append(
+                    np.array(
+                        [int.from_bytes(digest[:6], "little") + tags[n]],
+                        dtype=np.int64,
+                    )
+                )
+        return np.concatenate(parts)
+
+    return codes
 
 
 def _doc_term_counts(
@@ -57,19 +81,9 @@ def _doc_term_counts(
     groupBy — at 32 local cores the allocation/DRAM traffic made the stage
     run barely faster than at 8. Here each byte n-gram becomes an int64 code
     via a vectorized sliding-window dot product and ``np.unique`` yields the
-    counts, all inside the map task: no string churn, no tf shuffle at all.
-    Gram codes pack the n bytes plus a width tag (hash semantics are
-    internal to the scorer — nothing downstream needs xxhash parity)."""
-    # Codes pack n bytes base-256 below a width tag at bit 48; width 7+ would
-    # overflow into the tag and silently collide terms across widths.
-    if n_hi > 6:
-        raise ValueError(
-            f"shingle width n_hi={n_hi} exceeds 6; gram codes only hold 6 "
-            "bytes below the width tag at bit 48"
-        )
-    widths = list(range(n_lo, n_hi + 1))
-    mults = {n: (256 ** np.arange(n, dtype=np.int64)) for n in widths}
-    tags = {n: np.int64(n) << np.int64(48) for n in widths}
+    counts, all inside the map task: no string churn, no tf shuffle at all
+    (gram codes: :func:`_gram_kernel`)."""
+    codes = _gram_kernel(n_lo, n_hi)
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -77,28 +91,7 @@ def _doc_term_counts(
             out_h: list[np.ndarray] = []
             out_tf: list[np.ndarray] = []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                b = np.frombuffer(
-                    ("" if text is None else str(text)).encode("utf-8"),
-                    dtype=np.uint8,
-                )
-                codes_parts = []
-                for n in widths:
-                    if len(b) >= n:
-                        win = np.lib.stride_tricks.sliding_window_view(b, n)
-                        codes_parts.append(
-                            win.astype(np.int64) @ mults[n] + tags[n]
-                        )
-                    else:
-                        # whole-(short-)string fallback, mirroring
-                        # char_shingles: one deterministic code per width
-                        digest = hashlib.md5(bytes(b) + bytes([n])).digest()
-                        codes_parts.append(
-                            np.array(
-                                [int.from_bytes(digest[:6], "little") + tags[n]],
-                                dtype=np.int64,
-                            )
-                        )
-                uniq, counts = np.unique(np.concatenate(codes_parts), return_counts=True)
+                uniq, counts = np.unique(codes(text), return_counts=True)
                 out_id.append(np.full(len(uniq), int(doc_id), dtype=np.int64))
                 out_h.append(uniq)
                 out_tf.append(counts.astype(np.int64))
@@ -137,14 +130,7 @@ def _partition_term_dfs(
     partial-aggregation site moves. Memory is bounded by flushing a partial
     block every ~4M accumulated entries; the downstream groupBy sums
     partials either way."""
-    if n_hi > 6:
-        raise ValueError(
-            f"shingle width n_hi={n_hi} exceeds 6; gram codes only hold 6 "
-            "bytes below the width tag at bit 48"
-        )
-    widths = list(range(n_lo, n_hi + 1))
-    mults = {n: (256 ** np.arange(n, dtype=np.int64)) for n in widths}
-    tags = {n: np.int64(n) << np.int64(48) for n in widths}
+    codes = _gram_kernel(n_lo, n_hi)
     flush_entries = 4_000_000
 
     def per_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -159,32 +145,7 @@ def _partition_term_dfs(
 
         for pdf in batches:
             for text in pdf[text_col]:
-                b = np.frombuffer(
-                    ("" if text is None else str(text)).encode("utf-8"),
-                    dtype=np.uint8,
-                )
-                codes_parts = []
-                for n in widths:
-                    if len(b) >= n:
-                        win = np.lib.stride_tricks.sliding_window_view(b, n)
-                        codes_parts.append(
-                            np.unique(win.astype(np.int64) @ mults[n]) + tags[n]
-                        )
-                    else:
-                        digest = hashlib.md5(bytes(b) + bytes([n])).digest()
-                        codes_parts.append(
-                            np.array(
-                                [int.from_bytes(digest[:6], "little") + tags[n]],
-                                dtype=np.int64,
-                            )
-                        )
-                # per-width uniques are already globally distinct: the width
-                # tag occupies bits >= 48 and codes stay below 2^48
-                u = (
-                    codes_parts[0]
-                    if len(codes_parts) == 1
-                    else np.concatenate(codes_parts)
-                )
+                u = np.unique(codes(text))
                 acc.append(u)
                 acc_n += len(u)
                 if acc_n >= flush_entries:
@@ -357,11 +318,7 @@ def doc_vector_table(
     sc = texts.sparkSession.sparkContext
     bc = sc.broadcast((h_sorted, idf_sorted))
 
-    if n_hi > 6:
-        raise ValueError("shingle width n_hi must be <= 6 (see _doc_term_counts)")
-    widths = list(range(n_lo, n_hi + 1))
-    mults = {n: (256 ** np.arange(n, dtype=np.int64)) for n in widths}
-    tags = {n: np.int64(n) << np.int64(48) for n in widths}
+    codes = _gram_kernel(n_lo, n_hi)
     k = (1 << 30) if top_k is None else top_k
 
     def per_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -370,26 +327,7 @@ def doc_vector_table(
             ids: list[int] = []
             vecs: list[dict] = []
             for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                b = np.frombuffer(
-                    ("" if text is None else str(text)).encode("utf-8"),
-                    dtype=np.uint8,
-                )
-                codes_parts = []
-                for n in widths:
-                    if len(b) >= n:
-                        win = np.lib.stride_tricks.sliding_window_view(b, n)
-                        codes_parts.append(win.astype(np.int64) @ mults[n] + tags[n])
-                    else:
-                        digest = hashlib.md5(bytes(b) + bytes([n])).digest()
-                        codes_parts.append(
-                            np.array(
-                                [int.from_bytes(digest[:6], "little") + tags[n]],
-                                dtype=np.int64,
-                            )
-                        )
-                uniq, counts = np.unique(
-                    np.concatenate(codes_parts), return_counts=True
-                )
+                uniq, counts = np.unique(codes(text), return_counts=True)
                 if len(hs):
                     pos_c = np.minimum(np.searchsorted(hs, uniq), len(hs) - 1)
                     keep = hs[pos_c] == uniq
@@ -448,12 +386,6 @@ _DOT_SQL = (
 )
 
 
-def _dot_expr():
-    # Built lazily: F.expr needs an active SparkContext, and this module
-    # imports fine without one (spark-submit ships it before the session).
-    return F.expr(_DOT_SQL)
-
-
 def pair_cosine_vecs(
     pairs: DataFrame,
     vecs: DataFrame,
@@ -461,8 +393,13 @@ def pair_cosine_vecs(
     dst_col: str = "dst",
     broadcast_max_docs: int = 400_000,
 ) -> DataFrame:
-    """Cosine per candidate pair from a prebuilt (doc_id, vec) table:
-    two equi-joins + a JVM fold dot product (see pair_cosine).
+    """Cosine similarity per candidate pair from a prebuilt (doc_id, vec)
+    table of L2-normalized vectors: ``cos = sum(w_src * w_dst)`` over
+    shared shingles. Re-expresses reference utils.py:211-232 (row-wise
+    TF-IDF cosine) as two linear equi-joins attaching each side's pruned
+    weight map, then the JVM ``array_intersect`` + ``aggregate`` dot
+    product (``_DOT_SQL`` above) — whole-stage-codegen, no Python, no
+    per-shingle shuffle.
 
     Join strategy (guide §3.1): a sort-merge pick here would shuffle the
     PAIRS twice, the second time with the ~600-byte ``vec_a`` map already
@@ -484,43 +421,7 @@ def pair_cosine_vecs(
     vecs = vecs.localCheckpoint(eager=False)
     if n_docs is not None and n_docs <= broadcast_max_docs:
         vecs = F.broadcast(vecs)
-    dot = _dot_expr()
-    return (
-        pairs.select(src_col, dst_col)
-        .join(
-            vecs.select(F.col("doc_id").alias(src_col), F.col("vec").alias("vec_a")),
-            src_col,
-        )
-        .join(
-            vecs.select(F.col("doc_id").alias(dst_col), F.col("vec").alias("vec_b")),
-            dst_col,
-        )
-        .select(src_col, dst_col, dot.alias("tfidf_cos"))
-    )
-
-
-def pair_cosine(
-    pairs: DataFrame,
-    weights: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    top_k: int | None = 128,
-) -> DataFrame:
-    """Cosine similarity per candidate pair: ``cos = sum(w_src * w_dst)``
-    over shared shingles (vectors L2-normalized). Re-expresses reference
-    utils.py:211-232 (row-wise TF-IDF cosine).
-
-    Physical strategy: attach each side's pruned weight map (two linear
-    equi-joins), then the JVM ``array_intersect`` + ``aggregate`` dot
-    product (``_DOT_SQL`` above) — whole-stage-codegen, no Python, no
-    per-shingle shuffle. An earlier exploded-join formulation shuffled
-    pairs × shingles rows (quadratic in practice) and was replaced after
-    profiling at sf0.001.
-    """
-    # Barrier: the vector table feeds both the src- and dst-side joins; the
-    # weights/top-k window pipeline must not run twice.
-    vecs = doc_vectors(weights, top_k=top_k).localCheckpoint(eager=False)
-    dot = _dot_expr()
+    dot = F.expr(_DOT_SQL)
     return (
         pairs.select(src_col, dst_col)
         .join(

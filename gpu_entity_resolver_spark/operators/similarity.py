@@ -207,7 +207,10 @@ def ivf_topk(
         "(acc, e) -> CASE WHEN e.d > acc.d OR (e.d = acc.d AND e.cid < acc.cid) "
         "THEN struct(e.cid AS cid, e.d AS d) ELSE acc END)"
     )
-    dim = _probe_dim(cents, "centv")
+    # width probed on the small query frame (as brute_force_topk does): the
+    # un-cached `cents` would pay its corpus sort for the probe; the CASE
+    # guards in _dot/_norm keep rows of any other width exact
+    dim = _probe_dim(queries, vec_col)
     assigned = (
         c.crossJoin(F.broadcast(cents_arr))
         .select("nid", "cv", argmax.getField("cid").alias("centroid_id"))

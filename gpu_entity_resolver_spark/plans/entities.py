@@ -36,7 +36,7 @@ from ..functions.normalize import (
 from ..operators.blocking import blocking_plan, candidate_pairs
 from ..operators.canonical import canonical_map
 from ..operators.connected_components import connected_components
-from ..operators.scoring import make_jw_udf, score_pairs
+from ..operators.scoring import check_threshold, make_jw_udf, score_pairs
 
 
 def _entity_scoring_config(cfg: ResolverConfig) -> ScoringConfig:
@@ -358,6 +358,8 @@ class EntityResolver:
     def _resolve(self, sdf: DataFrame, entity_col: str, address_col: str) -> DataFrame:
         spark = self._session()
         cfg = self.config
+        scfg = _entity_scoring_config(cfg)
+        check_threshold("entity_threshold", self.entity_threshold, scfg)
         prep = self._prepare(sdf, entity_col, address_col).localCheckpoint(
             eager=False
         )
@@ -405,7 +407,6 @@ class EntityResolver:
         )
 
         ccfg = cfg.clustering
-        scfg = _entity_scoring_config(cfg)
         # short entity names: the phonetic key family earns its keep here
         # (V2; useless on long web documents)
         bcfg = dataclasses.replace(cfg.blocking, use_phonetic_keys=True)

@@ -29,7 +29,12 @@ from ..functions.normalize import confidence_bin, normalize_entity_text
 from ..operators.blocking import blocking_plan, candidate_pairs
 from ..operators.canonical import canonical_map
 from ..operators.connected_components import connected_components
-from ..operators.scoring import edges_above_threshold, make_jw_udf, score_pairs
+from ..operators.scoring import (
+    check_threshold,
+    edges_above_threshold,
+    make_jw_udf,
+    score_pairs,
+)
 from ..sources.checkpoint import CheckpointManager
 from ..util import spread_input
 
@@ -101,6 +106,13 @@ def resolve_documents(
                 ),
             ),
         )
+    check_threshold("edge_threshold", cfg.scoring.edge_threshold, cfg.scoring)
+    if cfg.clustering.ensemble_mutual_rank:
+        check_threshold(
+            "ensemble_recall_threshold",
+            cfg.clustering.ensemble_recall_threshold,
+            cfg.scoring,
+        )
     ckpt = CheckpointManager(spark, checkpoint_dir or cfg.runtime.checkpoint_dir)
 
     # Stage 1 (extraction UDF + normalization) is narrow, so it inherits the
@@ -123,25 +135,15 @@ def resolve_documents(
 
     pairs = ckpt.stage("02_pairs", build_pairs)
 
-    # The checkpointed stage keeps ONLY the exact-score rows (jw non-null,
-    # score_pairs exact_only mode — one linear plan, no approx-branch
-    # unions or barriers). Proof that nothing downstream reads the rest:
-    # edges need score >= edge_threshold, and score <= _partial + jw_share,
-    # so any row at or above the threshold cleared the decision band and
-    # has an exact jw; G8 attachment explicitly consumes jw-non-null rows
-    # only (approximate scores must not enter its mean/ratio tests); the
-    # ensemble recall path thresholds at >= the band floor (the config
-    # widening above guarantees it). The jw-null rows — ~95% of the
-    # candidate volume, cosine-prefilter prunes and band skips — were
-    # being materialized into the stage table for no consumer (guide §1.2:
-    # don't compute/store what you throw away; the cosine PASS over them
-    # is still paid, it is the prefilter itself).
+    # score_pairs keeps only the exactly scored pairs (one linear plan):
+    # the cosine-prefilter prunes and decision-band skips — ~95% of the
+    # candidate volume — score below approx_score_bound, under every
+    # threshold read below (edge, ensemble recall: checked above), so the
+    # stage table carries no rows nothing reads (guide §1.2). The cosine
+    # pass over them is still paid; it is the prefilter itself.
     scored = ckpt.stage(
         "03_scored",
-        lambda: score_pairs(
-            pairs, prepared, "doc_id", "norm_text", cfg.scoring,
-            exact_only=True,
-        ),
+        lambda: score_pairs(pairs, prepared, "doc_id", "norm_text", cfg.scoring),
     )
     edges = edges_above_threshold(scored, cfg.scoring.edge_threshold)
 
@@ -195,18 +197,13 @@ def resolve_documents(
         if cfg.clustering.attach_noise:
             # G8: rescue singletons with a strong unambiguous sub-threshold
             # signal (reference utils.py:473-545) — reuses the stage-03
-            # scores, no extra scoring pass. jw-null rows (decision-band
-            # skips + cosine-prefilter prunes) carry APPROXIMATE scores,
-            # provably < band lo (0.55), far under tau: feed only exact
-            # scores into the mean/ratio tests so an underreported
-            # runner-up mean can never inflate the best/second ratio. The
+            # scores, no extra scoring pass. Those rows are all exact, so
+            # no approximate score enters the mean/ratio tests. The
             # reference's neighborhood is top-k by similarity
-            # (utils.py:490-492); pairs this weak are precisely the ones
-            # its kNN crowds out.
+            # (utils.py:490-492); pairs below the band are precisely the
+            # ones its kNN crowds out.
             out = attach_singletons(
-                scored.where(F.col("jw").isNotNull()).select(
-                    "src", "dst", "score"
-                ),
+                scored.select("src", "dst", "score"),
                 out,
                 tau=cfg.clustering.attachment_similarity_threshold,
                 min_matching=cfg.clustering.attachment_min_matching,

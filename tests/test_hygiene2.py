@@ -2,6 +2,7 @@
 names-per-address consolidation, G8 singleton attachment, G9 sampled-member
 merge with the J3 name∩addr gate, A7 ensemble purity mapping."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from gpu_entity_resolver_spark.config import ResolverConfig
@@ -12,6 +13,7 @@ from gpu_entity_resolver_spark.operators.hygiene import (
     ensemble_overlap_purity,
     merge_similar_clusters,
 )
+from gpu_entity_resolver_spark.operators.scoring import score_pairs
 
 
 def test_consolidate_similar_addresses(spark):
@@ -110,6 +112,76 @@ def test_merge_similar_clusters_sampled(spark):
     out2 = merge_similar_clusters(members, canon, cfg, canon_addr=far_addr)
     got2 = {r.doc_id: r.cluster for r in out2.collect()}
     assert got2[1] != got2[3]
+
+
+_G = "acme manufacturing company of rockford illinois"
+_P = "illinois rockford of company manufacturing acme"  # band skip vs _G
+_U = "completely unrelated text about gardening tulips"  # prefilter prune
+_G2 = "zebra logistics warehouse services of galena"
+_P2 = "galena of services warehouse logistics zebra"  # band skip vs _G2
+_H = "northwind trading partners of peoria"
+
+
+def test_merge_left_out_pairs_at_middle_rank(spark):
+    """Member pairs score_pairs leaves out count as 0.0 in the median. The
+    result is pinned to the output of the former scorer, which reported
+    approximate scores (~0.30 / ~0.42 / ~0.005) for those pairs:
+    - 100/200: 7 of 16 member pairs left out, the middle ranks exact ->
+      merge;
+    - 300/400: sorted scores [left-out, left-out, 1.0, 1.0] — a left-out
+      pair at the middle rank -> no merge (median ~0.71 before, 0.5 now;
+      dropping the left-out pairs instead would merge)."""
+    members = spark.createDataFrame(
+        [
+            (1, 100, _G), (2, 100, _G), (3, 100, _G), (4, 100, _P),
+            (5, 200, _G), (6, 200, _G), (7, 200, _G), (8, 200, _U),
+            (9, 300, _G2), (10, 300, _P2),
+            (11, 400, _G2), (12, 400, _G2),
+            (13, 500, _H), (14, 500, _H),
+        ],
+        "doc_id long, cluster long, norm_text string",
+    )
+    canon = spark.createDataFrame(
+        [(100, _G), (200, _G), (300, _G2), (400, _G2), (500, _H)],
+        "cluster long, canonical_text string",
+    )
+    cfg = ResolverConfig()
+    cross = spark.createDataFrame(
+        [(9, 11), (9, 12), (10, 11), (10, 12)], "src long, dst long"
+    )
+    exact = score_pairs(
+        cross, members.select("doc_id", "norm_text"), cfg=cfg.scoring
+    ).collect()
+    assert sorted((r.src, r.dst) for r in exact) == [(9, 11), (9, 12)]
+    got = {r.doc_id: r.cluster for r in merge_similar_clusters(
+        members, canon, cfg
+    ).collect()}
+    assert got == {
+        1: 100, 2: 100, 3: 100, 4: 100, 5: 100, 6: 100, 7: 100, 8: 100,
+        9: 300, 10: 300, 11: 400, 12: 400, 13: 500, 14: 500,
+    }
+
+
+@pytest.mark.parametrize(
+    "field, value",
+    [
+        ("centroid_similarity_threshold", 0.40),
+        ("merge_max_threshold", 0.40),
+        # (0.45 + 1) / 2 = 0.725 is the floor; the median bound is strict
+        ("merge_median_threshold", 0.725),
+    ],
+)
+def test_merge_rejects_threshold_below_bound(spark, field, value):
+    cfg = ResolverConfig()
+    setattr(cfg.clustering, field, value)
+    members = spark.createDataFrame(
+        [(1, 100, "acme")], "doc_id long, cluster long, norm_text string"
+    )
+    canon = spark.createDataFrame(
+        [(100, "acme")], "cluster long, canonical_text string"
+    )
+    with pytest.raises(ValueError, match=field):
+        merge_similar_clusters(members, canon, cfg)
 
 
 def test_number_chain_entities_standalone(spark):

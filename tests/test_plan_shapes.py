@@ -44,3 +44,21 @@ def test_no_cartesian_product(spark, sf_dir, name):
     assert "CartesianProduct" not in _explain(
         entry_mod.queries()[name](spark, sf_dir)
     )
+
+
+@pytest.mark.parametrize("band", [(0.55, 0.90), None])
+def test_score_pairs_plan_is_linear(spark, band):
+    """score_pairs returns only the exactly scored pairs: one linear plan,
+    no Union of approximate rows."""
+    from gpu_entity_resolver_spark.config import ScoringConfig
+    from gpu_entity_resolver_spark.operators.scoring import score_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "acme manufacturing rockford"), (2, "acme manufacturing co")],
+        "doc_id long, norm_text string",
+    )
+    pairs = spark.createDataFrame([(1, 2)], "src long, dst long")
+    s = _explain(
+        score_pairs(pairs, docs, cfg=ScoringConfig(jw_decision_band=band))
+    )
+    assert "Union" not in s

@@ -73,7 +73,7 @@ def test_decision_band_skips_only_low_side(spark):
     # ADVICE r3: confident pairs (partial >= hi) must get an EXACT jw —
     # mean/median/rank consumers read score values, not just threshold
     # outcomes. Only pairs that cannot reach `lo` even with jw = 1 skip
-    # the kernel, and their reported score stays below lo.
+    # the kernel, and score_pairs leaves them out.
     from gpu_entity_resolver_spark.operators.scoring import score_pairs
 
     docs = spark.createDataFrame(
@@ -87,12 +87,12 @@ def test_decision_band_skips_only_low_side(spark):
     pairs = spark.createDataFrame([(1, 2), (1, 3)], "src long, dst long")
     cfg = ScoringConfig(cosine_prefilter=0.0, jw_decision_band=(0.55, 0.90))
     rows = {(r["src"], r["dst"]): r for r in score_pairs(pairs, docs, cfg=cfg).collect()}
-    hi_pair, lo_pair = rows[(1, 2)], rows[(1, 3)]
+    hi_pair = rows[(1, 2)]
     assert hi_pair["jw"] is not None and hi_pair["jw"] > 0.99
     # exact score (not partial-only); float32 vector weights bound the slack
     assert abs(hi_pair["score"] - 1.0) < 1e-6
-    assert lo_pair["jw"] is None
-    assert lo_pair["score"] < 0.55
+    # the low pair cannot reach lo: left out, not reported approximately
+    assert (1, 3) not in rows
 
 
 # --- S3/S4 full config round-trip -------------------------------------------
@@ -298,12 +298,30 @@ def test_resolve_with_mutual_rank_ensemble(spark):
     assert {r["label_source"] for r in out0.select("label_source").distinct().collect()} == {0}
 
 
-def test_exact_only_equals_filtered_full(spark, sf_dir):
-    """r6b: score_pairs(exact_only=True) must equal the branching form
-    filtered to jw-non-null, row for row and bit for bit, on a real corpus
-    slice — and likewise with the decision band off (prefilter prunes
-    only)."""
-    from gpu_entity_resolver_spark.config import BlockingConfig
+# score_pairs rows on the sf0.001 slice below (lowered text, default
+# blocking, 619 candidate pairs): row count and sha256 of the sorted lines
+# "src,dst,tfidf_cos,lev_ratio,jw,ph_sim,score" with floats at 9
+# decimals, computed when score_pairs could still also report the pairs it
+# skips (approximate scores, jw null), as that form's jw-non-null rows.
+_EXACT_ROWS = [
+    ((0.55, 0.90), 28, "c86eeebe60cd93e9744d9e0d0180f08890b0a061a870f47a6f005a69f30e72f3"),
+    (None, 28, "c86eeebe60cd93e9744d9e0d0180f08890b0a061a870f47a6f005a69f30e72f3"),
+]
+
+
+def _row_line(row) -> str:
+    return ",".join(
+        "" if v is None else str(v) if isinstance(v, int) else f"{v:.9f}"
+        for v in row
+    )
+
+
+def test_score_rows_pinned_digest(spark, sf_dir):
+    """score_pairs returns exactly the exactly-scored rows of the former
+    two-mode scorer, row for row, on a real corpus slice — with the
+    decision band on and off (prefilter prunes only)."""
+    import hashlib
+
     from gpu_entity_resolver_spark.operators.blocking import (
         blocking_plan,
         candidate_pairs,
@@ -321,18 +339,74 @@ def test_exact_only_equals_filtered_full(spark, sf_dir):
     bcfg = BlockingConfig()
     keys, tokens = blocking_plan(docs, "doc_id", "norm_text", cfg=bcfg)
     pairs = candidate_pairs(keys, tokens, bcfg).localCheckpoint(eager=True)
-    for scfg in (
-        ScoringConfig(),
-        ScoringConfig(jw_decision_band=None),
-    ):
-        full = score_pairs(pairs, docs, cfg=scfg).where(
-            F.col("jw").isNotNull()
-        )
-        fast = score_pairs(pairs, docs, cfg=scfg, exact_only=True)
-        cols = ["src", "dst", "tfidf_cos", "lev_ratio", "jw", "ph_sim", "score"]
-        a = sorted(map(tuple, full.select(*cols).collect()))
-        b = sorted(map(tuple, fast.select(*cols).collect()))
-        assert len(a) > 0 and a == b
+    cols = ["src", "dst", "tfidf_cos", "lev_ratio", "jw", "ph_sim", "score"]
+    for band, n_rows, digest in _EXACT_ROWS:
+        scfg = ScoringConfig(jw_decision_band=band)
+        rows = score_pairs(pairs, docs, cfg=scfg).select(*cols).collect()
+        assert all(r["jw"] is not None for r in rows)
+        blob = "\n".join(sorted(_row_line(r) for r in rows)).encode()
+        assert (len(rows), hashlib.sha256(blob).hexdigest()) == (
+            n_rows, digest
+        ), band
+
+
+def test_approx_score_bound():
+    from gpu_entity_resolver_spark.operators.scoring import approx_score_bound
+    from gpu_entity_resolver_spark.plans.entities import _entity_scoring_config
+
+    # default: max(0.30 * 0.35, 0.55 - 0.10)
+    assert approx_score_bound(ScoringConfig()) == pytest.approx(0.45)
+    # band off: the cosine-prefilter share alone
+    assert approx_score_bound(
+        ScoringConfig(jw_decision_band=None)
+    ) == pytest.approx(0.105)
+    # entity scorer: 0.40 * 0.15 / 1.15, far under its 0.65 threshold
+    assert approx_score_bound(
+        _entity_scoring_config(ResolverConfig())
+    ) == pytest.approx(0.06 / 1.15)
+
+
+def test_resolve_rejects_threshold_below_bound(spark):
+    from gpu_entity_resolver_spark.plans.resolve import resolve_documents
+
+    docs = spark.createDataFrame(
+        [], "url string, warc_ts string, html string, text string, lang string"
+    )
+    cfg = ResolverConfig()
+    cfg.scoring.edge_threshold = 0.40
+    with pytest.raises(ValueError, match="edge_threshold"):
+        resolve_documents(spark, docs, cfg)
+    cfg = ResolverConfig()
+    cfg.clustering.ensemble_mutual_rank = True
+    cfg.clustering.ensemble_recall_threshold = 0.05
+    with pytest.raises(ValueError, match="ensemble_recall_threshold"):
+        resolve_documents(spark, docs, cfg)
+
+
+def test_assign_rejects_threshold_below_bound(spark):
+    from gpu_entity_resolver_spark.operators.hygiene import assign_new_documents
+
+    new = spark.createDataFrame([(1, "acme")], "doc_id long, norm_text string")
+    canon = spark.createDataFrame(
+        [(7, "acme")], "cluster long, canonical_text string"
+    )
+    cfg = ResolverConfig()
+    cfg.scoring.edge_threshold = 0.40
+    with pytest.raises(ValueError, match="edge_threshold"):
+        assign_new_documents(spark, new, canon, cfg)
+
+
+def test_entity_resolver_rejects_threshold_below_bound(spark):
+    import pandas as pd
+
+    from gpu_entity_resolver_spark.plans.entities import EntityResolver
+
+    df = pd.DataFrame(
+        {"company_name": ["Acme Inc"], "address": ["12 Main St Rockford IL"]}
+    )
+    er = EntityResolver(spark=spark, entity_threshold=0.03)
+    with pytest.raises(ValueError, match="entity_threshold"):
+        er.fit_transform(df)
 
 
 def test_unrolled_dot_equals_fold(spark):
