@@ -14,6 +14,8 @@ as joins/windows/aggregations:
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -768,17 +770,61 @@ def review_dataframe(resolved: DataFrame) -> DataFrame:
 
 # --- transform path (C13) ---------------------------------------------------
 
+class AssignmentIndex(NamedTuple):
+    """The canonical side of C13, built once by :func:`assignment_index`:
+    ``reps`` (doc_id, norm_text) and ``rep_keys`` (rep_id, block_key)."""
+
+    reps: DataFrame
+    rep_keys: DataFrame
+
+
+def assignment_index(
+    canon: DataFrame, cfg: ResolverConfig | None = None
+) -> AssignmentIndex:
+    """Build the canonical side of :func:`assign_new_documents` once, for
+    reuse across calls (a stream's micro-batches).
+
+    ``canon``: (cluster, canonical_text). ``reps`` is its (doc_id,
+    norm_text) projection; ``rep_keys`` is the reps' blocking keys without
+    those shared by more than ``max_block_size`` reps (the hot-key cap).
+    Both are lazy local checkpoints: nothing runs here, the first
+    assignment materializes them and later ones read them.
+    """
+    from .blocking import blocking_plan
+
+    cfg = cfg or ResolverConfig()
+    reps = canon.select(
+        F.col("cluster").alias("doc_id"), F.col("canonical_text").alias("norm_text")
+    ).localCheckpoint(eager=False)
+    # Hot-key cap (the cross-table analog of salt_blocks): a block key shared
+    # by more than max_block_size reps is a near-useless discriminator and
+    # would fan out new_n x rep_n rows — drop it; every doc carries many
+    # independent keys so recall loss is bounded. One count window, so the
+    # rep-side key build runs once.
+    rep_keys = (
+        blocking_plan(reps, "doc_id", "norm_text", cfg=cfg.blocking)[0]
+        .withColumn("_n", F.count("*").over(Window.partitionBy("block_key")))
+        .where(F.col("_n") <= cfg.blocking.max_block_size)
+        .select(F.col("doc_id").alias("rep_id"), "block_key")
+        .localCheckpoint(eager=False)
+    )
+    return AssignmentIndex(reps, rep_keys)
+
+
 def assign_new_documents(
     spark: SparkSession,
     new_docs: DataFrame,
-    canon: DataFrame,
+    canon: DataFrame | AssignmentIndex,
     cfg: ResolverConfig | None = None,
 ) -> DataFrame:
     """C13: assign new documents to existing clusters by blocking + scoring
     against the canonical representatives; unmatched docs become new
     entities (reference transform path, resolver.py:1633-1639).
 
-    ``new_docs``: (doc_id, norm_text); ``canon``: (cluster, canonical_text).
+    ``new_docs``: (doc_id, norm_text); ``canon``: (cluster, canonical_text),
+    or an :func:`assignment_index` built from it once and reused across
+    calls — both give the same rows. ``new_docs`` is read by several jobs;
+    a caller whose frame is costly to recompute persists it first.
     Returns (doc_id, cluster, match_score, is_new_entity).
     """
     from .blocking import blocking_plan
@@ -786,10 +832,8 @@ def assign_new_documents(
 
     cfg = cfg or ResolverConfig()
     check_threshold("edge_threshold", cfg.scoring.edge_threshold, cfg.scoring)
-    reps = canon.select(
-        F.col("cluster").alias("doc_id"), F.col("canonical_text").alias("norm_text")
-    )
-    combined = new_docs.select("doc_id", "norm_text").unionByName(reps)
+    index = canon if isinstance(canon, AssignmentIndex) else assignment_index(canon, cfg)
+    new_docs = new_docs.select("doc_id", "norm_text")
     # Block each side separately and equi-join the key tables directly:
     # candidate generation over union(new, reps) would materialize new x new
     # and rep x rep pairs only to discard them with semi-joins — this form
@@ -800,24 +844,8 @@ def assign_new_documents(
     new_keys = blocking_plan(
         new_docs, "doc_id", "norm_text", cfg=cfg.blocking
     )[0].select(F.col("doc_id").alias("new_id"), "block_key")
-    rep_keys = (
-        blocking_plan(reps, "doc_id", "norm_text", cfg=cfg.blocking)[0]
-        .select(F.col("doc_id").alias("rep_id"), "block_key")
-        .localCheckpoint(eager=False)
-    )
-    # Hot-key cap (the cross-table analog of salt_blocks): a block key shared
-    # by more than max_block_size reps is a near-useless discriminator and
-    # would fan out new_n x rep_n rows — drop it; every doc carries many
-    # independent keys so recall loss is bounded.
-    hot = (
-        rep_keys.groupBy("block_key")
-        .agg(F.count("*").alias("_n"))
-        .where(F.col("_n") > cfg.blocking.max_block_size)
-        .select("block_key")
-    )
     nr = (
-        new_keys.join(hot, "block_key", "left_anti")
-        .join(rep_keys, "block_key")
+        new_keys.join(index.rep_keys, "block_key")
         .select("new_id", "rep_id")
         .distinct()
     )
@@ -826,7 +854,7 @@ def assign_new_documents(
     # it, so had one won the rank its doc was unmatched either way.
     scored = score_pairs(
         nr.select(F.col("new_id").alias("src"), F.col("rep_id").alias("dst")),
-        combined,
+        new_docs.unionByName(index.reps),
         "doc_id",
         "norm_text",
         cfg.scoring,

@@ -72,23 +72,34 @@ def incremental_assign_sink(
     (C13 via ``foreachBatch`` — the canonical pattern for joining a stream
     against engine logic that needs blocking + scoring + windows).
 
+    The canonical side (``assignment_index``: rep projection and capped
+    rep blocking keys) is built once per query — in its first batch — and
+    reused by every batch. Each batch projects (doc_id, norm_text), caches
+    it, and assigns from the cache, so its source rows are read and
+    normalized once; the cache is released when the batch ends. An empty
+    batch writes nothing. ``edge_threshold`` is checked here, before the
+    query starts.
+
     Returns the started StreamingQuery.
     """
-    from ..operators.hygiene import assign_new_documents
+    from ..operators.hygiene import assign_new_documents, assignment_index
+    from ..operators.scoring import check_threshold
 
     cfg = cfg or ResolverConfig()
-    canon = canon.localCheckpoint(eager=False)
+    check_threshold("edge_threshold", cfg.scoring.edge_threshold, cfg.scoring)
+    index = assignment_index(canon, cfg)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        assigned = assign_new_documents(
-            spark,
-            batch_df.select("doc_id", "norm_text"),
-            canon,
-            cfg,
-        ).withColumn("batch_id", F.lit(batch_id))
-        assigned.write.mode("append").parquet(output_path)
+        new = batch_df.select("doc_id", "norm_text").persist()
+        try:
+            if new.count() == 0:
+                return
+            assigned = assign_new_documents(spark, new, index, cfg).withColumn(
+                "batch_id", F.lit(batch_id)
+            )
+            assigned.write.mode("append").parquet(output_path)
+        finally:
+            new.unpersist()
 
     return (
         normalize_stream(stream, cfg)

@@ -1,6 +1,10 @@
 """Tests for the hygiene operators (SURVEY.md §2.9) and phonetic encoding."""
 
+import hashlib
+
 import pandas as pd
+import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from gpu_entity_resolver_spark.functions.phonetic import (
@@ -10,6 +14,7 @@ from gpu_entity_resolver_spark.functions.phonetic import (
 )
 from gpu_entity_resolver_spark.operators.hygiene import (
     assign_new_documents,
+    assignment_index,
     check_no_key_in_two_clusters,
     check_unique_canonical_names,
     consolidate_identical_entities,
@@ -122,3 +127,71 @@ def test_assign_new_documents(spark):
     out = {r["doc_id"]: r for r in assign_new_documents(spark, new, canon).collect()}
     assert out[7]["cluster"] == 100 and not out[7]["is_new_entity"]
     assert out[8]["cluster"] == 8 and out[8]["is_new_entity"]
+
+
+# assign_new_documents rows on the sf0.001 webgen corpus (2,116 docs, 476
+# entities): the first page of each entity (by doc_id) is its cluster's
+# canonical text; new frame A is every entity's second page, B the rest.
+# Row count and sha256 of the sorted lines
+# "doc_id,cluster,match_score,is_new_entity" (score at 9 decimals),
+# computed when assign_new_documents rebuilt the canonical side per call.
+# max_block_size=1 caps every rep key shared by two reps.
+_ASSIGN_ROWS = {
+    128: (
+        (410, "3dd3a4092c5accd072ff7d23b363d5b67c080c7b41db4da351c7521a7699f670"),
+        (1230, "9b619a724fdb834aa151a8dd0679ff153b97ec7b903941cf9e5be72eef97d61c"),
+    ),
+    1: (
+        (410, "3dd3a4092c5accd072ff7d23b363d5b67c080c7b41db4da351c7521a7699f670"),
+        (1230, "5fc9fd6120d33456eee91077fb7822de36b32c248e132cf12c98398507ff5e08"),
+    ),
+}
+
+
+def _assign_digest(rows) -> tuple[int, str]:
+    lines = sorted(
+        f"{r['doc_id']},{r['cluster']},{r['match_score']:.9f},{r['is_new_entity']}"
+        for r in rows
+    )
+    return len(lines), hashlib.sha256("\n".join(lines).encode()).hexdigest()
+
+
+@pytest.mark.parametrize("max_block_size", sorted(_ASSIGN_ROWS))
+def test_assignment_index_reuse_pinned(spark, sf_dir, max_block_size):
+    """One assignment_index serves two different new-doc frames with the
+    rows a per-call canon DataFrame gives, pinned to the digests of the
+    per-call build."""
+    from gpu_entity_resolver_spark.config import ResolverConfig
+    from gpu_entity_resolver_spark.functions.extraction import extracted_text
+    from gpu_entity_resolver_spark.functions.normalize import normalize_entity_text
+    from gpu_entity_resolver_spark.sources.webgen import generate_documents
+
+    cfg = ResolverConfig()
+    cfg.blocking.max_block_size = max_block_size
+    docs = (
+        generate_documents(spark, sf_dir)
+        .select(
+            "doc_id",
+            normalize_entity_text(
+                extracted_text(F.col("html"), F.col("text")),
+                cfg.replacements,
+                cfg.suffixes_to_remove,
+            ).alias("norm_text"),
+            F.row_number()
+            .over(Window.partitionBy("entity_id").orderBy("doc_id"))
+            .alias("_r"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    canon = docs.where("_r = 1").select(
+        F.col("doc_id").alias("cluster"), F.col("norm_text").alias("canonical_text")
+    )
+    frames = [
+        docs.where("_r = 2").select("doc_id", "norm_text"),
+        docs.where("_r >= 3").select("doc_id", "norm_text"),
+    ]
+    index = assignment_index(canon, cfg)
+    for new, pinned in zip(frames, _ASSIGN_ROWS[max_block_size]):
+        per_call = _assign_digest(assign_new_documents(spark, new, canon, cfg).collect())
+        reused = _assign_digest(assign_new_documents(spark, new, index, cfg).collect())
+        assert per_call == reused == pinned
